@@ -17,10 +17,11 @@ is an explicit, keyed exchange:
   share at least one n-gram (inverted-index join), with frequency-based
   prefix pruning available via ``max_df``.
 
-Every dedup keeps the **lowest id** of a duplicate group's members that
-it can prove (single-hop canonicalization — a deliberate, documented
-approximation of connected components; full CC needs an iterative
-min-propagation which ``dedup_minhash(iterations=k)`` provides).
+Every dedup drops a document iff it has a verified match with a lower
+id. This single-hop rule is a deliberate, documented approximation of
+connected components: when ids a < b < c match only as a~c and b~c,
+both ``a`` and ``b`` survive, where components would keep ``a`` alone.
+``resolve_dup_clusters`` + ``dedup_by_clusters`` compute true components.
 """
 
 from __future__ import annotations
@@ -140,6 +141,11 @@ def _permute_mod_p(h, a, b):
     return np.where(s >= P, s - P, s)
 
 
+#: Shingles per vectorized block of the signature kernel (see
+#: ``minhash_signature``): sized so the kernel's temporaries fit in cache.
+_SIG_CHUNK = 1 << 11
+
+
 def minhash_signature(shingle_col, n_hashes: int = 64):
     """MinHash signature via the universal-hashing construction:
     ONE strong base hash per shingle (native ``xxhash64``, single
@@ -155,9 +161,12 @@ def minhash_signature(shingle_col, n_hashes: int = 64):
     Arrow batch into one shingle-hash vector, permutes it with exact
     uint64 split-multiply mod-p math (``_permute_mod_p``) and takes
     per-row minima via ``np.minimum.reduceat`` — bit-identical
-    signatures to v2, ~100× less Python overhead. Chunked so peak
-    intermediate memory stays ~n_hashes×2^18×8 B ≈ 128 MB regardless
-    of batch size.
+    signatures to v2, ~100× less Python overhead. The batch is cut into
+    blocks of whole rows of at most ``_SIG_CHUNK`` (2^11) shingles, so
+    each uint64 temporary of ``_permute_mod_p`` is n_hashes×2^11×8 B =
+    1 MiB at 64 hashes and the few live at once stay in cache (2^18
+    made them 128 MiB each and ran the kernel ~2× slower); a single row
+    with more shingles than that is its own block and sizes it.
     """
     c = F.col(shingle_col) if isinstance(shingle_col, str) else shingle_col
     a, b = _minhash_coeffs(n_hashes)
@@ -177,21 +186,22 @@ def minhash_signature(shingle_col, n_hashes: int = 64):
         if arrs:
             flat = np.concatenate(arrs).view(np.uint64) & np.uint64(_MINHASH_P)
             bounds = np.concatenate([[0], np.cumsum(lens)])
-            CHUNK = 1 << 18  # shingles per vectorized block
             rs = 0
             while rs < n:
                 re_ = rs + 1
-                while re_ < n and bounds[re_ + 1] - bounds[rs] <= CHUNK:
+                while re_ < n and bounds[re_ + 1] - bounds[rs] <= _SIG_CHUNK:
                     re_ += 1
                 seg = flat[bounds[rs] : bounds[re_]]
                 if len(seg):
                     perm = _permute_mod_p(seg, a_u, b_u)
-                    starts = (bounds[rs:re_] - bounds[rs]).astype(np.int64)
-                    mins = np.minimum.reduceat(
-                        perm, np.minimum(starts, len(seg) - 1), axis=1
-                    )
-                    sel = lens[rs:re_] > 0  # empty rows got a neighbor's value
-                    out[rs:re_][sel] = mins.T.astype(np.int64)[sel]
+                    # reduce over the non-empty rows' starts only: they
+                    # rise strictly, so each row's range ends where the
+                    # next non-empty row begins (an empty row's start
+                    # would cut its predecessor's range short)
+                    sel = lens[rs:re_] > 0
+                    starts = (bounds[rs:re_][sel] - bounds[rs]).astype(np.int64)
+                    mins = np.minimum.reduceat(perm, starts, axis=1)
+                    out[rs:re_][sel] = mins.T.astype(np.int64)
                 rs = re_
         return pd.Series(list(out))
 
@@ -251,68 +261,68 @@ def dedup_minhash(
     verify_exact: bool = True,
     materialize: bool = True,
 ) -> DataFrame:
-    """Fuzzy dedup via MinHash + LSH banding.
+    """Fuzzy dedup via MinHash + LSH banding: drops every document that
+    has a verified match with a lower id, keeps the rest.
 
     Pipeline (each step one keyed shuffle, never all-pairs):
-      1. signature per doc (no shuffle),
-      2. explode to (band, band_hash) and self-join on the bucket —
-         candidate pairs only among bucket-mates,
-      3. score the pair: with ``verify_exact`` (default, the production
-         design) the TRUE shingle-set Jaccard is computed on the
-         candidate pairs only — the output is then exact and
+      1. base frame: the input spread over the session's default
+         parallelism with an explicit ``repartition(n)`` (AQE never
+         coalesces it, and deciding needs no job — a ``.rdd`` partition
+         probe would execute a lazy input's whole plan), plus ``__sh``
+         (shingle set) and ``__sig`` (signature) columns; computed
+         ONCE,
+      2. explode the signatures to (band, band_hash) and self-join on
+         the bucket — candidate pairs only among bucket-mates,
+      3. score each pair ``id_a < id_b``: with ``verify_exact`` (default,
+         the production design) the TRUE shingle-set Jaccard is computed
+         on the candidate pairs only — the output is then exact and
          hash-independent (LSH misses a j≥0.8 pair with probability
          (1−j⁴)¹⁶ < 1e-8); with ``verify_exact=False`` the estimated
          Jaccard (fraction of equal signature positions) is used —
          cheaper, hash-dependent,
-      4. canonicalize: every doc maps to min(matched ids); ``iterations``
-         rounds of min-propagation approximate connected components
-         (1 round = direct-match canonical, enough for near-dup sets
-         that share buckets; raise for chained duplicates).
+      4. drop set: the distinct ``id_b`` of the pairs at or above
+         ``threshold`` — ids only,
+      5. return the base frame's original columns left-anti-joined with
+         the drop set (rows with a NULL id never pair, so they are kept).
 
-    Returns the deduplicated DataFrame (original columns).
+    ``iterations`` has no effect and is kept for existing callers: the
+    kept set is decided by direct matches alone (a document with no
+    lower-id match is its own minimum however often minima propagate),
+    so min-propagation rounds never changed it.
 
-    ``materialize`` (default): the kept-id set — ids only, one row per
-    surviving doc — is computed eagerly (localCheckpoint) and the
-    internal shingle/signature caches are unpersisted before returning,
-    so the call leaves no tracked cache behind (structural release —
-    VERDICT r8 #3). ``materialize=False`` keeps the fully lazy plan
-    (persists tracked under tag ``dedup_minhash``; caller releases via
-    ``release_persisted``) for plan introspection / composition.
+    ``materialize`` (default) eager-``localCheckpoint``s the base frame
+    and the drop set: both self-join sides and the verify join then
+    read one computed base (two lazy persists were both read before
+    either was filled, so the signature UDF ran twice), the returned
+    frame re-runs neither the UDF nor the input's plan, and nothing is
+    left tracked — checkpoint blocks are freed by Spark's ContextCleaner
+    with the returned frame. ``materialize=False`` keeps the plan lazy
+    for introspection / composition: the same two frames are persisted
+    under tag ``dedup_minhash`` and the caller releases them via
+    ``release_persisted``.
     """
+    from palo_spark.operators.cache import _materialize
+
+    def hold(frame: DataFrame) -> DataFrame:
+        return _materialize(frame) if materialize else _persist(frame, "dedup_minhash")
+
     rows_per_band = n_hashes // bands
-    src = df
-    parallelism = df.sparkSession.sparkContext.defaultParallelism
-    if src.rdd.getNumPartitions() < parallelism:
-        # few-file inputs (one parquet footer at small SF) would run the
-        # shingle + 64-hash signature projection — the expensive stage —
-        # on 1-2 tasks; the input here is (id, text) narrow, so this
-        # shuffle is cheap insurance (same fix as substring_dup_docs)
-        src = src.select(F.col(id_col), F.col(text_col)).repartition(parallelism)
-    sh = src.select(
-        F.col(id_col).alias("__id"), shingles(text_col, shingle_k).alias("__sh")
+    base = (
+        df.repartition(df.sparkSession.sparkContext.defaultParallelism)
+        .withColumn("__sh", shingles(text_col, shingle_k))
+        .withColumn("__sig", minhash_signature(F.col("__sh"), n_hashes))
     )
-    sig = sh.select(
-        "__id", minhash_signature(F.col("__sh"), n_hashes).alias("__sig")
-    )
-    # the signature feeds BOTH sides of the bucket self-join (and the
-    # shingle sets feed the verify join): without a persist the whole
-    # shingle→64-hash pipeline is recomputed per branch — measured 2.4×
-    # slower. MEMORY_AND_DISK: spills instead of OOMing at scale; the
-    # sketch (64 longs/doc) is tiny next to the corpus it indexes.
-    # ``sig`` deliberately does NOT carry ``__sh``: the shingle arrays
-    # are the heaviest column and live in ``sh``'s cache already —
-    # carrying them here would double-cache the corpus's dominant bytes.
-    # Tracked in operators.cache — callers release via release_persisted().
-    sh = _persist(sh, "dedup_minhash")
-    sig = _persist(sig, "dedup_minhash")
+    base = hold(base)
     # with exact verification the bucket self-join needs only (id, band,
     # bucket-hash) — shuffling the 64-long signatures through the join
     # (both sides × ``bands`` rows each) would multiply shuffle volume
     # for columns the verify path never reads; only the estimated-
     # Jaccard path carries them
     sig_cols = [] if verify_exact else ["__sig"]
-    buckets = sig.select(
-        "__id", *sig_cols, F.explode(_band_hash("__sig", bands, rows_per_band)).alias("__b")
+    buckets = base.select(
+        F.col(id_col).alias("__id"),
+        *sig_cols,
+        F.explode(_band_hash("__sig", bands, rows_per_band)).alias("__b"),
     ).select("__id", *sig_cols, F.col("__b.band").alias("__band"), F.col("__b.bh").alias("__bh"))
 
     left = buckets.select(
@@ -333,8 +343,8 @@ def dedup_minhash(
         .dropDuplicates(["id_a", "id_b"])
     )
     if verify_exact:
-        sh_a = sh.select(F.col("__id").alias("id_a"), F.col("__sh").alias("sh_a"))
-        sh_b = sh.select(F.col("__id").alias("id_b"), F.col("__sh").alias("sh_b"))
+        sh_a = base.select(F.col(id_col).alias("id_a"), F.col("__sh").alias("sh_a"))
+        sh_b = base.select(F.col(id_col).alias("id_b"), F.col("__sh").alias("sh_b"))
         inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
         est = (
             pairs.select("id_a", "id_b")
@@ -358,32 +368,9 @@ def dedup_minhash(
             / F.lit(float(n_hashes)),
         ).filter(F.col("__jac") >= threshold)
 
-    # canonical id per doc: min over matched partners (and self)
-    edges = est.select(F.col("id_b").alias("__id"), F.col("id_a").alias("__canon"))
-    canon = df.select(F.col(id_col).alias("__id")).join(edges, "__id", "left").groupBy(
-        "__id"
-    ).agg(F.least(F.min("__canon"), F.min("__id")).alias("__canon"))
-    canon = canon.withColumn("__canon", F.coalesce("__canon", "__id"))
-    for _ in range(iterations - 1):
-        # propagate: my canon = canon of my canon
-        c2 = canon.select(F.col("__id").alias("__cid"), F.col("__canon").alias("__c2"))
-        canon = (
-            canon.join(c2, canon["__canon"] == c2["__cid"], "left")
-            .select("__id", F.coalesce("__c2", "__canon").alias("__canon"))
-        )
-
-    keep = canon.filter(F.col("__id") == F.col("__canon")).select("__id")
-    if materialize:
-        from palo_spark.operators.cache import _materialize, _release_frames
-
-        try:
-            # ids-only: ~8 bytes/doc — trivial next to the corpus. The
-            # shingle/signature caches serve the one checkpoint job,
-            # then release unconditionally.
-            keep = _materialize(keep)
-        finally:
-            _release_frames(sh, sig)
-    return df.join(keep, df[id_col] == keep["__id"], "left_semi")
+    drop = hold(est.select(F.col("id_b").alias("__dup")).distinct())
+    kept = base.drop("__sh", "__sig")
+    return kept.join(drop, kept[id_col] == drop["__dup"], "left_anti")
 
 
 def md5_token_hash(t):

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import re
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -80,6 +82,50 @@ def test_dedup_minhash_iterations_chain(spark):
         r["doc_id"] for r in dedup_minhash(df, threshold=0.9, iterations=2).collect()
     )
     assert kept2 == [1]
+
+
+def _shingle_set(text: str, k: int = 5) -> set[str]:
+    """Python twin of ``shingles`` for ASCII text."""
+    norm = re.sub(r"\s+", " ", text.strip(" ")).lower()
+    return {norm[i : i + k] for i in range(max(len(norm) - k + 1, 1))}
+
+
+def test_dedup_minhash_drop_set_matches_reference(spark):
+    """The kept set is exactly the docs with no lower-id partner at exact
+    5-shingle Jaccard >= threshold, and ``iterations`` does not move it:
+    5 matches only 2 and 3, both dropped, and is dropped too; 8 and 9
+    match only 10, so both survive (single-hop, not components)."""
+    b2 = (
+        "columnar storage engines keep each column in its own file so that "
+        "scans read only the bytes a query needs and compress runs of equal values"
+    )
+    rows = [
+        (1, BASE),
+        (2, BASE + " xx"),
+        (3, BASE + " xx yy zz qq"),
+        (4, "completely different text about spark and parquet files"),
+        (5, BASE + " xx yy zz qq rr ss"),
+        (6, "completely different text about spark and parquet files too"),
+        (7, "an unrelated note on vectorized hash joins"),
+        (8, b2.replace(" so that ", " that ")),
+        (9, b2.replace(" runs of ", " of ")),
+        (10, b2),
+    ]
+    df = _docs(spark, rows)
+    sets = {i: _shingle_set(t) for i, t in rows}
+
+    def jac(a, b):
+        return len(sets[a] & sets[b]) / len(sets[a] | sets[b])
+
+    want = sorted(
+        i for i, _ in rows if not any(jac(j, i) >= 0.9 for j, _ in rows if j < i)
+    )
+    assert want == [1, 4, 7, 8, 9]  # the corpus has the cases above
+    kept1 = sorted(r["doc_id"] for r in dedup_minhash(df, threshold=0.9).collect())
+    kept3 = sorted(
+        r["doc_id"] for r in dedup_minhash(df, threshold=0.9, iterations=3).collect()
+    )
+    assert kept1 == kept3 == want
 
 
 def test_dedup_simhash_near_dup(spark):
@@ -687,6 +733,59 @@ def test_minhash_signature_batch_edge_cases(spark):
     sentinel = [_MINHASH_P] * 64
     assert rows["b"] == sentinel and rows["d"] == sentinel and rows["e"] == sentinel
     assert rows["a"] == rows["c"] and rows["a"] != sentinel
+
+
+def test_minhash_signature_multi_chunk_batch(spark):
+    """One Arrow batch cut into several kernel blocks: a row larger than
+    a block, empty and NULL rows opening and closing blocks. Every
+    signature equals the per-row Python-int reference."""
+    from palo_spark.operators.dedup import (
+        _MINHASH_P,
+        _SIG_CHUNK,
+        _minhash_coeffs,
+        minhash_signature,
+    )
+
+    def words(n, tag):
+        return [f"{tag}{i}" for i in range(n)]
+
+    shs = [
+        [],                                # empty row opens the batch's first block
+        words(_SIG_CHUNK + 100, "big"),    # more shingles than a block: a block of its own
+        None,                              # NULL row opens the next block
+        words(50, "s"),
+        words(_SIG_CHUNK - 50, "m"),       # fills the NULL row's block to exactly a block
+        [],                                # empty row closes it (zero width still fits)
+        words(1500, "m"),                  # overflows: new block, shares shingles with row 4
+        None,                              # NULL row closes that block
+        words(600, "t"),                   # overflows again
+        [],
+        words(3, "s"),
+        None,                              # trailing NULL
+    ]
+    df = spark.createDataFrame(
+        list(enumerate(shs)), "id int, sh array<string>"
+    ).coalesce(1)  # one partition: all rows in one Arrow batch
+    got = {
+        r["id"]: (r["sig"], r["h"])
+        for r in df.select(
+            "id",
+            minhash_signature(F.col("sh")).alias("sig"),
+            F.transform("sh", lambda x: F.xxhash64(x)).alias("h"),
+        ).collect()
+    }
+    a, b = _minhash_coeffs(64)
+    for i, sh in enumerate(shs):
+        sig, hashes = got[i]
+        if not sh:
+            want = [_MINHASH_P] * 64
+        else:
+            hs = [h & _MINHASH_P for h in hashes]
+            want = [
+                min((int(ai) * h + int(bi)) % _MINHASH_P for h in hs)
+                for ai, bi in zip(a, b)
+            ]
+        assert sig == want, i
 
 
 def test_lsh_band_bits_null_and_ragged_vectors(spark):

@@ -147,6 +147,18 @@ def test_dedup_minhash_has_no_cartesian(spark, sf_dir):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
+def test_dedup_minhash_output_reruns_no_upstream(spark, sf_dir):
+    """The eager output reads the checkpointed base frame and drop set:
+    neither the signature UDF (ArrowEvalPython) nor the upstream
+    ``dedup_exact`` (Window) runs again downstream of the call."""
+    from palo_spark.operators import dedup_exact, dedup_minhash
+
+    d = load_table(spark, sf_dir, "documents").limit(100)
+    plan = plan_of(dedup_minhash(dedup_exact(d), threshold=0.9))
+    assert "ArrowEvalPython" not in plan
+    assert "Window" not in plan
+
+
 def test_embedding_dedup_has_no_cartesian(spark, sf_dir):
     from palo_spark.operators import dedup_embedding_cosine
 
